@@ -13,8 +13,9 @@ multi-executor cluster):
       --bands B02 B03 B04 \
       --grid-res 0.0099 --tile 1024 --resume
 
-Locally it runs on whatever master the session default picks
-(local[$SPARK_GRAFT_CPUS]). The job is resumable: re-running with the same
+Locally it runs on whatever master the session default picks:
+local[$SPARK_GRAFT_CPUS], or local[*] (one task slot per CPU) when that
+variable is unset. The job is resumable: re-running with the same
 --out skips partitions already in the commit log.
 
 Build the --py-files archive with:

@@ -94,8 +94,10 @@ def test_write_cube_plan_has_no_driver_collect(small_cube, tmp_path):
     src = inspect.getsource(lineage.write_cube)
     assert ".collect()" not in src and "toPandas" not in src
     # the fused path is allowed EXACTLY ONE collect: the DISTINCT DAY list
-    # (one value per solar day in the run — used for the day-pruned
-    # read-back listing); the crash-leftover pre-clean is a distributed
+    # (one value per solar day in the run), taken up front — it decides
+    # whether there is anything to write, whether the pre-clean must run
+    # (only when a day directory already exists) and which day directories
+    # the read-back lists; the pre-clean itself is a distributed
     # mapInPandas stage, so nothing partition-count-shaped crosses the
     # driver
     fused = inspect.getsource(lineage._write_cube_fused)
@@ -339,3 +341,81 @@ def test_fused_readback_tolerates_ancient_store_without_data_bytes(
     empty = small_cube.where(F.lit(False))
     m = lineage.write_cube(empty, out, expected_partitions=small_expected)
     assert m["written_partitions"] == 0
+
+
+#: Spark jobs of one fused one-day write into a fresh store (sf0.001, one
+#: band, local[8], 32 shuffle partitions): 27 when every call ran the
+#: pre-clean stage and counted the commit table with Spark, 20 since the
+#: pre-clean is skipped on fresh days and the bookkeeping is driver-side
+FUSED_DAY_MAX_JOBS = 20
+
+
+@pytest.fixture(scope="module")
+def first_day(small_expected):
+    return str(small_expected.agg(F.min("solar_day")).first()[0])
+
+
+def _day(df, day):
+    return df.where(F.col("solar_day") == F.lit(day).cast("date"))
+
+
+def test_zero_partition_calls_report_elapsed_without_run_record(
+    spark, small_cube, small_expected, first_day, tmp_path
+):
+    """A call that commits nothing still reports the time it took, and
+    appends no runs.jsonl line: a fully committed fused resume, and a
+    zero-row write into a fresh store."""
+    cube, exp = _day(small_cube, first_day), _day(small_expected, first_day)
+    out = str(tmp_path / "committed")
+    assert lineage.write_cube(cube, out, expected_partitions=exp)["written_partitions"] > 0
+    runs_before = lineage.runs(out)
+    assert len(runs_before) == 1
+    m = lineage.write_cube(cube, out, expected_partitions=exp)
+    assert m["written_partitions"] == 0 and m["elapsed_sec"] > 0
+    assert lineage.runs(out) == runs_before
+    fresh = str(tmp_path / "zero_rows")
+    m = lineage.write_cube(cube.where(F.lit(False)), fresh, expected_partitions=exp)
+    assert m["written_partitions"] == 0 and m["elapsed_sec"] > 0
+    assert lineage.runs(fresh) == []
+
+
+def test_fused_preclean_runs_only_when_a_day_dir_exists(
+    spark, small_cube, small_expected, first_day, tmp_path, monkeypatch
+):
+    """Crash leftovers of (d, y, x) can only live under solar_day=d: a write
+    whose day directories do not exist skips the pre-clean stage, and one
+    into an existing day directory runs it over at most defaultParallelism
+    partitions (not the key set's shuffle partitions)."""
+    calls = []
+    real = lineage._preclean_distributed
+
+    def spy(keys, path):
+        calls.append(keys.rdd.getNumPartitions())
+        return real(keys, path)
+
+    monkeypatch.setattr(lineage, "_preclean_distributed", spy)
+    cube, exp = _day(small_cube, first_day), _day(small_expected, first_day)
+    out = str(tmp_path / "spy")
+    assert lineage.write_cube(cube, out, expected_partitions=exp)["written_partitions"] > 0
+    assert calls == []
+    m = lineage.write_cube(cube, out, resume=False, expected_partitions=exp)
+    assert m["written_partitions"] > 0
+    assert len(calls) == 1
+    assert 1 <= calls[0] <= spark.sparkContext.defaultParallelism
+
+
+def test_fused_one_day_write_job_count(spark, small_cube, small_expected, first_day, tmp_path):
+    """Plan-regression guard: the Spark jobs one fused one-day call launches
+    (its job group, read through statusTracker) do not grow back."""
+    sc = spark.sparkContext
+    group = "test-fused-one-day-write"
+    cube, exp = _day(small_cube, first_day), _day(small_expected, first_day)
+    sc.setJobGroup(group, "fused one-day write_cube")
+    try:
+        m = lineage.write_cube(cube, str(tmp_path / "jobs"), expected_partitions=exp)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert m["written_partitions"] > 0
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= FUSED_DAY_MAX_JOBS, n_jobs

@@ -37,6 +37,9 @@ from pyspark.sql import functions as F
 
 COMMITLOG = "_commitlog"
 PART_COLS = ["solar_day", "tile_y", "tile_x"]
+#: key columns of every commit table; reading with it skips the schema
+#: inference job a bare ``spark.read.parquet`` launches
+_KEY_SCHEMA = "solar_day string, tile_y int, tile_x int"
 
 
 def _log_dir(path: str) -> str:
@@ -80,9 +83,7 @@ def committed_partitions(spark: SparkSession, path: str) -> DataFrame:
     pq, jl = _commit_tables(path)
     parts = []
     if pq:
-        parts.append(
-            spark.read.parquet(*pq).select("solar_day", "tile_y", "tile_x")
-        )
+        parts.append(spark.read.schema(_KEY_SCHEMA).parquet(*pq))
     if jl:
         rows = []
         for p in jl:
@@ -92,12 +93,12 @@ def committed_partitions(spark: SparkSession, path: str) -> DataFrame:
                     for r in map(json.loads, f)
                 )
         parts.append(
-            spark.createDataFrame(rows, "solar_day string, tile_y int, tile_x int")
+            spark.createDataFrame(rows, _KEY_SCHEMA)
         )
     if not parts:
-        return spark.createDataFrame(
-            [], "solar_day string, tile_y int, tile_x int"
-        ).withColumn("solar_day", F.to_date("solar_day"))
+        return spark.createDataFrame([], _KEY_SCHEMA).withColumn(
+            "solar_day", F.to_date("solar_day")
+        )
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -107,13 +108,17 @@ def committed_partitions(spark: SparkSession, path: str) -> DataFrame:
 def pending_partitions(cube: DataFrame, path: str) -> DataFrame:
     """Anti-join the cube against the commit log → only not-yet-committed
     partitions survive. This is the resume path: re-running a failed job
-    skips completed (solar_day, tile_y, tile_x) partitions entirely — and
-    because the mosaic groupBy key EQUALS the partition key, Catalyst prunes
-    the upstream work for committed partitions too when the filter is pushed
-    before the shuffle."""
-    done = committed_partitions(cube.sparkSession, path)
-    if done.isEmpty():
+    neither rewrites nor re-commits completed (solar_day, tile_y, tile_x)
+    partitions. It does NOT save their pixel work: the broadcast anti-join
+    sits above the mosaic's MapInPandas in the physical plan (the filter
+    cannot pass the Python UDFs), so every scene of the cube's time range is
+    still decoded, regridded and mosaicked, and the committed tiles are
+    dropped only before the sink. A caller that wants a cheaper resume
+    narrows the cube's own inputs (the per-day job skips committed days
+    before it builds a plan)."""
+    if not any(_commit_tables(path)):
         return cube
+    done = committed_partitions(cube.sparkSession, path)
     return cube.join(F.broadcast(done), PART_COLS, "left_anti")
 
 
@@ -125,8 +130,10 @@ def write_cube(
     expected_partitions: DataFrame | None = None,
 ) -> dict:
     """Write cube tiles partitioned by (solar_day, tile_y, tile_x); after a
-    successful write, the commit log gains one JSON line PER PARTITION with
-    its metrics/lineage. Returns run metrics.
+    successful write, the commit log gains one parquet commit table with a
+    row PER PARTITION holding its metrics/lineage. Returns run metrics; a
+    call that commits nothing returns ``written_partitions`` 0 with its
+    measured ``elapsed_sec`` and appends no ``runs.jsonl`` line.
 
     Resume contract: commit granularity is the WRITE CALL (all partitions of
     a successful call are logged atomically at its end); resume granularity
@@ -161,7 +168,15 @@ def write_cube(
     to expected-and-not-previously-committed partitions makes it exactly
     this run's output: every such partition was fully rewritten by this run
     (dynamic partition overwrite replaces whole partition dirs), so partial
-    files from any earlier crashed run can't leak into a commit. Without
+    files from any earlier crashed run can't leak into a commit. Partial
+    files of a crashed run under an expected partition that yields zero rows
+    this time are deleted by a pre-clean stage before the write; it runs
+    only when one of the run's ``solar_day=`` directories already exists,
+    since a leftover cannot live anywhere else, so a call on a fresh day
+    skips it. Besides the pipeline itself, a fused call costs one collect of
+    the run's day list, the column-pruned read-back and a small commit-table
+    write; the commit bookkeeping (any commits yet, staged row count,
+    publish) runs on the driver without Spark jobs. Without
     ``expected_partitions`` the legacy persist+two-pass path runs.
     """
     spark = cube.sparkSession
@@ -205,9 +220,9 @@ def write_cube(
             .write.mode("overwrite")
             .parquet(staging)
         )
-        n_parts = spark.read.parquet(staging).count()
+        n_parts = _staged_rows(staging)
         if n_parts == 0:
-            return {"written_partitions": 0, "elapsed_sec": 0.0, "resumed": resume}
+            return _zero_run(t0, resume)
 
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # no repartition here: mosaic_take_first already hash-partitions its
@@ -231,6 +246,29 @@ def write_cube(
     # a crash before this rename leaves only ignorable staging (data
     # partitions are then recomputed and overwritten idempotently)
     return _publish_commit(path, staging, run_id, n_parts, t0, resume)
+
+
+def _staged_rows(staging: str) -> int:
+    """Row count of a staged commit table, summed from its parquet footers
+    on the driver: the commit log is local-FS (see ``_publish_commit``), so
+    this costs no Spark job."""
+    import pyarrow.parquet as pq_mod
+
+    return sum(
+        pq_mod.read_metadata(os.path.join(staging, fn)).num_rows
+        for fn in os.listdir(staging)
+        if fn.endswith(".parquet") and not fn.startswith(("_", "."))
+    )
+
+
+def _zero_run(t0: float, resume: bool) -> dict:
+    """Run totals of a call that commits nothing: no commit table and no
+    runs.jsonl line, but the time the call took is still reported."""
+    return {
+        "written_partitions": 0,
+        "elapsed_sec": round(time.perf_counter() - t0, 3),
+        "resumed": resume,
+    }
 
 
 def _publish_commit(path: str, staging: str, run_id: str, n_parts: int,
@@ -304,44 +342,60 @@ def _write_cube_fused(
     write first (the only pass over pixel planes), then commit metrics from
     a column-pruned read-back of the written store."""
     spark = cube.sparkSession
+    # a listed parquet commit always holds rows (one is only published when
+    # n_parts > 0), so the listing answers "any commits?" without a job
+    pq, jl = _commit_tables(path)
+    have_commits = bool(pq or jl)
     done = committed_partitions(spark, path)
-    have_commits = not done.isEmpty()
-    exp_all = expected_partitions.select(
+    keys = expected_partitions.select(
         F.to_date(F.col("solar_day").cast("string")).alias("solar_day"),
         F.col("tile_y").cast("int").alias("tile_y"),
         F.col("tile_x").cast("int").alias("tile_x"),
     ).distinct()
-    # UNCOMMITTED expected keys — the only keys whose directories may hold
-    # crash leftovers and may safely be deleted. Committed directories are
-    # NEVER pre-cleaned, in either resume mode: with resume=False the run
-    # rewrites them via dynamic partition overwrite (which replaces a dir
-    # only when new rows actually land), so deleting them up front would
-    # turn a mid-write crash — or a zero-row partition — into silent data
-    # loss that the commit log still records as committed.
-    uncommitted = (
-        exp_all.join(F.broadcast(done), PART_COLS, "left_anti")
-        if have_commits
-        else exp_all
-    )
     # resume narrows the run to uncommitted keys; a full rewrite covers all
-    exp = uncommitted if (resume and have_commits) else exp_all
-    exp = exp.persist()  # one row per partition key — tiny at any cube size
+    if resume and have_commits:
+        keys = keys.join(F.broadcast(done), PART_COLS, "left_anti")
+    # one row per partition key — tiny at any cube size. Coalesced to the
+    # task slots: the distinct's shuffle.partitions partitions would make
+    # every reuse below (day list, pre-clean, read-back semi-join) launch
+    # that many near-empty tasks
+    exp = keys.coalesce(spark.sparkContext.defaultParallelism).persist()
     try:
-        if exp.isEmpty():
-            return {"written_partitions": 0, "elapsed_sec": 0.0, "resumed": resume}
+        # the ONE collect: the distinct day list (one value per solar day in
+        # the run). It answers "anything to do?", tells whether a crash
+        # leftover can exist at all, and bounds the read-back listing below
+        days = sorted(
+            str(r["solar_day"])
+            for r in exp.select("solar_day").distinct().collect()
+        )
+        if not days:
+            return _zero_run(t0, resume)
+        day_dirs = [os.path.join(path, f"solar_day={d}") for d in days]
         todo = cube
         if resume and have_commits:
             todo = todo.join(F.broadcast(done), PART_COLS, "left_anti")
-        # pre-clean leftovers of CRASHED runs under the uncommitted keys:
+        # pre-clean leftovers of CRASHED runs under the UNCOMMITTED keys:
         # dynamic partition overwrite only replaces partitions the data
         # actually contains, so an expected partition that yields ZERO rows
         # this run would otherwise leave a crashed run's partial files in
         # place — and the read-back below would commit them as complete.
-        # The delete runs DISTRIBUTED (one mapInPandas stage over the key
-        # DataFrame): no per-key driver filesystem calls, so a 100x-scale
-        # run with 10^5-10^6 partition keys launches tasks immediately
-        # instead of stat-ing the store from the driver first.
-        _preclean_distributed(uncommitted, path)
+        # A leftover for (d, y, x) lives under solar_day=d, so when none of
+        # this run's day directories exists there is nothing to delete and
+        # the stage is skipped. Committed directories are NEVER pre-cleaned,
+        # in either resume mode: with resume=False the run rewrites them via
+        # dynamic partition overwrite (which replaces a dir only when new
+        # rows actually land), so deleting them up front would turn a
+        # mid-write crash — or a zero-row partition — into silent data loss
+        # that the commit log still records as committed. The delete runs
+        # DISTRIBUTED (one mapInPandas stage over the key DataFrame): no
+        # per-key driver filesystem calls at 10^5-10^6 partition keys.
+        if any(os.path.isdir(p) for p in day_dirs):
+            uncommitted = (
+                exp.join(F.broadcast(done), PART_COLS, "left_anti")
+                if have_commits and not resume
+                else exp
+            )
+            _preclean_distributed(uncommitted, path)
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         (
             todo.withColumn("solar_day", F.col("solar_day").cast("string"))
@@ -353,26 +407,16 @@ def _write_cube_fused(
         # metrics/lineage from the just-written files, with the LISTING
         # pruned to this run's solar days: reading the store root would
         # re-list and footer-read every partition ever written — O(total
-        # store) per call, O(N^2) over an N-day per-day/streaming loop.
-        # The expected day set is tiny (one value per day in the run), so
-        # collecting it driver-side and reading only those day directories
-        # bounds the read-back to this run's own output. A day directory
-        # can be absent entirely when every expected tile of that day
-        # produced zero rows (all-nodata scenes) — skipped, and the
+        # store) per call, O(N^2) over an N-day per-day/streaming loop. A
+        # day directory can be absent entirely when every expected tile of
+        # that day produced zero rows (all-nodata scenes) — skipped, and the
         # zero-days case returns gracefully instead of failing schema
         # inference on an empty store. Parquet column pruning means the
         # plane payload column is NEVER read here — only partition values
         # and the small metric columns.
-        days = sorted(
-            str(r["solar_day"])
-            for r in exp.select("solar_day").distinct().collect()
-        )
-        day_paths = [
-            p for p in (os.path.join(path, f"solar_day={d}") for d in days)
-            if os.path.isdir(p)
-        ]
+        day_paths = [p for p in day_dirs if os.path.isdir(p)]
         if not day_paths:
-            return {"written_partitions": 0, "elapsed_sec": 0.0, "resumed": resume}
+            return _zero_run(t0, resume)
         rb0 = (
             spark.read.option("mergeSchema", "true")
             .option("basePath", path)
@@ -431,11 +475,11 @@ def _write_cube_fused(
             .write.mode("overwrite")
             .parquet(staging)
         )
-        n_parts = spark.read.parquet(staging).count()
+        n_parts = _staged_rows(staging)
     finally:
         exp.unpersist()
     if n_parts == 0:
-        return {"written_partitions": 0, "elapsed_sec": 0.0, "resumed": resume}
+        return _zero_run(t0, resume)
     return _publish_commit(path, staging, run_id, n_parts, t0, resume)
 
 

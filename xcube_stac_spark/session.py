@@ -75,13 +75,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) so
-    the bench harness can run the identical job at two parallelism levels
-    (local[8] vs local[32]) to evidence the N->4N scaling-efficiency rule.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, and to ``local[*]``
+    (one task slot per CPU of the machine) when that variable is unset, so a
+    local run never oversubscribes the box.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
     for k, v in _BLAS_VARS.items():
         os.environ.setdefault(k, v)  # local mode: workers fork from driver env
     builder = SparkSession.builder.appName(app_name).master(master)
